@@ -4,15 +4,19 @@ Spans are recorded from the benchmark's own files: :meth:`Tracer.patch`
 wraps public entry points of the program (``run_entity``,
 ``SnapshotTable.write``, ``FileLedger.unprocessed``/``mark``) for the
 duration of a ``with`` block and restores them afterwards. Each span
-sets a Spark job group, so every Spark job is attributed to the
-innermost span open when it was submitted. Per-stage executor metrics
-are read once, at the end, from the driver's local status REST API
-(``/api/v1/applications/<id>/jobs`` and ``/stages``) and summed per
-span.
+sets a Spark job group in the thread that opens it, so a job is
+attributed to the innermost span that its submitting thread has open.
+Jobs that carry no span's group (a streaming query's micro-batches run
+under the stream's own group, a thread pool's workers start with none)
+go by submission time to the innermost *window* span open at that
+moment. Per-stage executor metrics are read once, at the end, from the
+driver's local status REST API (``/api/v1/applications/<id>/jobs`` and
+``/stages``) and summed per span.
 
-Attribution by job group is exact only while spans are opened from the
-thread that submits the jobs, which holds for the sequential
-``run_all`` path the benchmark times.
+Under ``run_all(parallel=True)`` each entity's ``run_entity`` span is
+opened in the pool thread that runs it, so its jobs, stages and
+executor time are that entity's own; its wall time overlaps the other
+entities' and is not the entity's cost.
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ import threading
 import time
 import urllib.request
 from dataclasses import dataclass, field
+from datetime import datetime
 
 SPARK_FIELDS = (
     "jobs",
@@ -44,6 +49,7 @@ class Span:
     end: float | None = None
     attrs: dict = field(default_factory=dict)
     spark: dict = field(default_factory=lambda: dict.fromkeys(SPARK_FIELDS, 0))
+    wall: float = 0.0  # time.time() at open, for submission-time attribution
 
     @property
     def duration(self) -> float:
@@ -117,7 +123,7 @@ class Tracer:
         parent = self._parent()
         with self._lock:
             span = Span(len(self.spans), name, parent.id if parent else None,
-                        time.perf_counter(), attrs=dict(attrs))
+                        time.perf_counter(), attrs=dict(attrs), wall=time.time())
             self.spans.append(span)
         self._stack().append(span)
         self._set_group(span)
@@ -156,7 +162,9 @@ class Tracer:
 
     def attribute_spark(self, timeout_s: float = 60.0) -> int:
         """Sum per-stage executor metrics into the span whose job group
-        ran them. Returns the number of jobs attributed."""
+        ran them, or else into the innermost span opened with
+        ``window=True`` that was open when the job was submitted.
+        Returns the number of jobs attributed."""
         sc = self.sc
         base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
 
@@ -165,13 +173,15 @@ class Tracer:
                 return json.load(r)
 
         by_id = {s.id: s for s in self.spans}
+        windows = [s for s in self.spans if s.attrs.get("window")]
         stage_owner: dict[int, Span] = {}
         n = 0
         for job in sorted(get("/jobs"), key=lambda j: j["jobId"]):
             group = job.get("jobGroup") or ""
-            if not group.startswith("pb-"):
-                continue
-            span = by_id.get(int(group[3:]))
+            if group.startswith("pb-"):
+                span = by_id.get(int(group[3:]))
+            else:
+                span = self._window_at(windows, job.get("submissionTime"))
             if span is None:
                 continue
             span.spark["jobs"] += 1
@@ -190,6 +200,17 @@ class Tracer:
             m["spill_bytes"] += st["memoryBytesSpilled"] + st["diskBytesSpilled"]
             m["input_bytes"] += st["inputBytes"]
         return n
+
+    @staticmethod
+    def _window_at(windows: list[Span], submitted: str | None) -> Span | None:
+        """Innermost window span open at a REST API submission time
+        (``2024-05-01T10:00:00.123GMT``, millisecond resolution)."""
+        if not submitted:
+            return None
+        t = datetime.strptime(submitted.replace("GMT", "+0000"),
+                              "%Y-%m-%dT%H:%M:%S.%f%z").timestamp()
+        open_then = [s for s in windows if s.wall - 1e-3 <= t <= s.wall + s.duration + 1e-3]
+        return max(open_then, key=lambda s: s.wall, default=None)
 
     def subtree(self, root: Span) -> list[Span]:
         """``root`` and all its descendants."""

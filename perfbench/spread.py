@@ -1,12 +1,15 @@
 """Run the benchmark over several seeds and summarise each metric.
 
-    python3 perfbench/spread.py --workloads initial_load delta_load --seeds 1-10 \
+    python3 perfbench/spread.py --workloads delta_load query_mix --seeds 1-10 \
         --out perfbench/_work/spread.json
 
 For every workload and metric it reports the median, the quartiles
 (``statistics.quantiles(values, n=4)``) and the spread, the distance
 between the quartiles as a share of the median. Runs are sequential,
 one process each, exactly as ``BENCHMARK.json`` invokes them.
+``--record`` passes ``--record`` to every run, so each seed's KPI
+hashes are written once its other checks pass (a seed already recorded
+is checked against its hashes first).
 """
 
 from __future__ import annotations
@@ -40,6 +43,7 @@ def main() -> int:
     ap.add_argument("--seconds", type=int, default=None,
                     help="default: run_seconds from BENCHMARK.json")
     ap.add_argument("--trace", type=int, default=0)
+    ap.add_argument("--record", action="store_true")
     ap.add_argument("--out", required=True)
     args = ap.parse_args()
     with open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")) as f:
@@ -51,7 +55,8 @@ def main() -> int:
         for seed in args.seeds:
             proc = subprocess.run(
                 [sys.executable, os.path.join(HERE, "run.py"), "--workload", w,
-                 "--seed", str(seed), "--seconds", str(seconds), "--trace", str(args.trace)],
+                 "--seed", str(seed), "--seconds", str(seconds), "--trace", str(args.trace),
+                 *(["--record"] if args.record else [])],
                 stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
             last = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else "{}"
             res = json.loads(last) if last.startswith("{") else {}
