@@ -768,9 +768,9 @@ def q145_pipeline_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wh = Warehouse(os.path.join(work, "wh"))
     r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     for res, day in ((r1, 1), (r2, 2)):
         loaded = {r["entity"] for r in res if not r["skipped"]}
         if loaded != {"location", "menu", "login_audit"}:
@@ -781,7 +781,7 @@ def q145_pipeline_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rerun idempotence: same files, ledger must skip every entity —
     # the different batch_ts would otherwise stamp visible SCD2 churn
     r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
     if not_skipped:
         raise RuntimeError(
@@ -1046,9 +1046,9 @@ def q147_json_entity_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wh = Warehouse(os.path.join(work, "wh"))
     r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     for res, day in ((r1, 1), (r2, 2)):
         loaded = {r["entity"] for r in res if not r["skipped"]}
         if loaded != {"delivery_agent"}:
@@ -1057,7 +1057,7 @@ def q147_json_entity_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"{loaded}, expected exactly {{'delivery_agent'}}"
             )
     r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
     if not_skipped:
         raise RuntimeError(
@@ -1470,9 +1470,9 @@ def q155_order_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wh = Warehouse(os.path.join(work, "wh"))
     r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     for res, day in ((r1, 1), (r2, 2)):
         loaded = {r["entity"] for r in res if not r["skipped"]}
         if loaded != {"orders", "order_item"}:
@@ -1481,7 +1481,7 @@ def q155_order_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "expected exactly {'orders', 'order_item'}"
             )
     r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
     if not_skipped:
         raise RuntimeError(
@@ -1867,9 +1867,9 @@ def q156_customer_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wh = Warehouse(os.path.join(work, "wh"))
     r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     for res, day in ((r1, 1), (r2, 2)):
         loaded = {r["entity"] for r in res if not r["skipped"]}
         if loaded != {"customer", "customer_address"}:
@@ -1878,7 +1878,7 @@ def q156_customer_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"{loaded}, expected exactly {{'customer', 'customer_address'}}"
             )
     r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
     if not_skipped:
         raise RuntimeError(
@@ -2240,9 +2240,9 @@ def q159_restaurant_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wh = Warehouse(os.path.join(work, "wh"))
     r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     for res, day in ((r1, 1), (r2, 2)):
         loaded = {r["entity"] for r in res if not r["skipped"]}
         if loaded != {"restaurant", "delivery"}:
@@ -2251,7 +2251,7 @@ def q159_restaurant_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"{loaded}, expected exactly {{'restaurant', 'delivery'}}"
             )
     r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+                 checkpoint="fork", parallel=True)
     not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
     if not_skipped:
         raise RuntimeError(

@@ -23,7 +23,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.keys import hash_key
@@ -64,6 +64,14 @@ def _read_source(spark: SparkSession, spec: EntitySpec, path: str) -> DataFrame:
     return read_stage_csv(spark, path, spec.source_columns)
 
 
+def _write_counted(tbl, df: DataFrame) -> int:
+    """Write ``df`` as the table's next snapshot and return its row
+    count, observed inside the write job."""
+    obs = Observation()
+    tbl.write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    return obs.get["rows"]
+
+
 def merge_entity_batch(
     spark: SparkSession,
     wh: Warehouse,
@@ -71,12 +79,16 @@ def merge_entity_batch(
     raw: DataFrame,
     batch_ts,
     checkpoint: bool | str = False,
-) -> None:
+) -> dict:
     """The shared clean→dedup→latest-per-key→SCD1→SCD2 merge body —
     ONE implementation behind both drivers (batch :func:`run_entity`
     and streaming ``merge_microbatch``), so a semantics change lands
     in exactly one place (the "one library, two drivers" invariant
     SURVEY §7/M5 calls for).
+
+    Returns ``{"clean_rows", "dim_rows"}``: the row counts of the new
+    clean and dim/fact snapshots, observed (``DataFrame.observe``)
+    inside the two write jobs — no extra job counts them.
 
     ``checkpoint`` materializes the typed batch once so the clean and
     dim merges below don't each re-derive it from the source:
@@ -85,14 +97,6 @@ def merge_entity_batch(
       foreachBatch where the micro-batch source cannot be re-read by
       the merge's multiple scans. Costs one eager materialization job
       up front.
-    - ``"persist"`` → ``cache`` — no extra job: the clean-merge write
-      both computes and caches the batch, the dim merge reuses it,
-      and the cache is dropped before returning. Correct ONLY when
-      the source is re-readable (batch files), since an evicted
-      partition recomputes from the source — which is exactly why the
-      streaming driver must keep ``True``. One fewer Spark job per
-      entity per day (round-12: the replay family's fixed per-job
-      overhead dominated its bench wall).
     - ``"fork"`` → ``localCheckpoint`` + CONCURRENT clean and dim
       merges (guide §2.6 — round 14). The two merges share no state
       (different snapshot tables, different writer locks) and both
@@ -117,27 +121,25 @@ def merge_entity_batch(
         else [F.lit(1)]
     )
     typed = latest_per_key(typed, spec.key, order_cols)  # C7 guard
-    persisted = False
-    if checkpoint == "persist":
-        typed = typed.persist()
-        persisted = True
-    elif checkpoint:  # True or "fork": eager lineage-break checkpoint
+    if checkpoint:  # True or "fork": eager lineage-break checkpoint
         typed = typed.localCheckpoint()
 
-    def _merge_clean() -> None:
+    def _merge_clean() -> int:
         clean_tbl = wh.clean(spec.name)
         prev_clean = clean_tbl.read(spark)
         attrs = [c for c in typed.columns if c not in spec.key]
-        clean_tbl.write(merge_upsert(prev_clean, typed, spec.key, attrs))
+        return _write_counted(clean_tbl, merge_upsert(prev_clean, typed, spec.key, attrs))
 
-    def _merge_dim() -> None:
+    def _merge_dim() -> int:
         # --- consumption: SCD2 dim (C4) or SCD1 fact (C5)
         dim_tbl = wh.dim(spec.name)
         hk_name = f"{spec.name}_hk"
         with_hk = typed.withColumn(hk_name, hash_key(*spec.key, *spec.scd2_attrs))
         if spec.scd1_only:
             prev_fact = dim_tbl.read(spark)
-            dim_tbl.write(merge_upsert(prev_fact, with_hk, spec.key, spec.scd2_attrs))
+            return _write_counted(
+                dim_tbl, merge_upsert(prev_fact, with_hk, spec.key, spec.scd2_attrs)
+            )
         else:
             prev_dim = dim_tbl.read(spark)
             cfg = Scd2Config(
@@ -146,22 +148,19 @@ def merge_entity_batch(
                 created_col=spec.created_col,
                 first_start_from_created=True,
             )
-            dim_tbl.write(apply_scd2(prev_dim, with_hk, cfg, batch_ts))
+            return _write_counted(dim_tbl, apply_scd2(prev_dim, with_hk, cfg, batch_ts))
 
-    try:
-        if checkpoint == "fork":
-            from concurrent.futures import ThreadPoolExecutor
+    if checkpoint == "fork":
+        from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut = pool.submit(_merge_clean)
-                _merge_dim()
-                fut.result()
-        else:
-            _merge_clean()
-            _merge_dim()
-    finally:
-        if persisted:
-            typed.unpersist()
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            fut = pool.submit(_merge_clean)
+            dim_rows = _merge_dim()
+            clean_rows = fut.result()
+    else:
+        clean_rows = _merge_clean()
+        dim_rows = _merge_dim()
+    return {"clean_rows": clean_rows, "dim_rows": dim_rows}
 
 
 def run_entity(
@@ -170,23 +169,20 @@ def run_entity(
     spec: EntitySpec,
     file_path: str,
     batch_ts=None,
-    collect_stats: bool = True,
     checkpoint: bool | str = False,
 ) -> dict:
     """<ENTITY>_MAIN_PROCEDURE (O1): COPY → SCD1 → SCD2, idempotent.
 
-    ``collect_stats=False`` skips the post-load COUNT(*) sanity probes
-    (A1, `02 Location Entity.sql:50,83`) — two extra jobs per entity a
-    caller that reads the tables back anyway (q145's replay) doesn't
-    need; the merge writes themselves are unaffected.
+    A loaded entity reports ``clean_rows``/``dim_rows``, the post-load
+    COUNT(*) sanity probes (A1, `02 Location Entity.sql:50,83`). Like
+    Snowflake's metadata-answered counts they cost no job: both are
+    observed inside the clean and dim write jobs.
 
     ``checkpoint`` materializes the typed batch once after the dedup
     guard instead of re-parsing the stage file for each of the clean
     and dim merges — ``True`` via localCheckpoint (an extra eager
-    job), ``"persist"`` via cache (no extra job; the batch source is
-    re-readable, so the lineage break isn't needed), ``"fork"`` via
-    localCheckpoint + concurrent stage/clean/dim jobs — see
-    :func:`merge_entity_batch`)."""
+    job), ``"fork"`` via localCheckpoint + concurrent stage/clean/dim
+    jobs — see :func:`merge_entity_batch`)."""
     batch_ts = batch_ts if batch_ts is not None else F.current_timestamp()
     ledger = wh.ledger(spec.name)
     todo = ledger.unprocessed([file_path]) if os.path.exists(file_path) else []
@@ -233,18 +229,14 @@ def run_entity(
 
         with ThreadPoolExecutor(max_workers=1) as pool:
             fut = pool.submit(_stage_write)
-            merge_entity_batch(spark, wh, spec, raw, batch_ts, checkpoint=checkpoint)
+            rows = merge_entity_batch(spark, wh, spec, raw, batch_ts, checkpoint=checkpoint)
             fut.result()
     else:
         _stage_write()
-        merge_entity_batch(spark, wh, spec, raw, batch_ts, checkpoint=checkpoint)
+        rows = merge_entity_batch(spark, wh, spec, raw, batch_ts, checkpoint=checkpoint)
 
     ledger.mark(todo)
-    out = {"entity": spec.name, "staged_files": len(todo), "skipped": False}
-    if collect_stats:
-        out["clean_rows"] = wh.clean(spec.name).read(spark).count()
-        out["dim_rows"] = wh.dim(spec.name).read(spark).count()
-    return out
+    return {"entity": spec.name, "staged_files": len(todo), "skipped": False, **rows}
 
 
 def run_all(
@@ -252,7 +244,6 @@ def run_all(
     wh: Warehouse,
     stage_prefix: str,
     batch_ts=None,
-    collect_stats: bool = True,
     checkpoint: bool | str = False,
     parallel: bool = False,
 ) -> list[dict]:
@@ -281,7 +272,6 @@ def run_all(
             spec,
             path,
             batch_ts=batch_ts,
-            collect_stats=collect_stats,
             checkpoint=checkpoint,
         )
 

@@ -244,13 +244,19 @@ def q161_duplicate_key_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     day2 = changed.unionByName(stale)
     # one agg job, not a count() plus a distinct().count() (guide
-    # §1.2); customer_id is the non-null c_custkey, so COUNT(DISTINCT)
-    # equals the distinct-row count here
+    # §1.2); COUNT(DISTINCT) skips NULL keys, so it equals the
+    # distinct-key count only while customer_id (the c_custkey) is
+    # never NULL — the same agg counts NULL keys to pin that
     s = day2.agg(
         F.count(F.lit(1)).alias("n_raw"),
         F.countDistinct(*key).alias("n_keys"),
+        F.count_if(F.col(key[0]).isNull()).alias("n_null_keys"),
     ).collect()[0]
     n_raw, n_keys = s["n_raw"], s["n_keys"]
+    assert s["n_null_keys"] == 0, (
+        f"day-2 batch has {s['n_null_keys']} NULL customer_id row(s) — "
+        "COUNT(DISTINCT) would not count them as a key"
+    )
     assert n_raw > n_keys, (
         f"day-2 batch has no physical in-batch duplicates "
         f"({n_raw} rows over {n_keys} keys) — the C6 guard was not exercised"

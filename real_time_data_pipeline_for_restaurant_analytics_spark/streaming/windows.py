@@ -174,9 +174,12 @@ def _make_session_fn(gap_ms: int, ts_col: str, idle_timeout: bool = True):
             yield _emit(key, [start_us], [last_us], [n])
             return
         arrs = [df[ts_col].to_numpy() for df in pdfs]
-        ts = arrs[0] if len(arrs) == 1 else np.concatenate(arrs)
-        iv = ts.astype("datetime64[ns]").view("int64")
-        iv = iv[iv != _NAT] // 1000  # drop NaT rows, ns → µs
+        if not arrs:  # no batch frames for a live key: an empty batch
+            iv = np.empty(0, dtype="int64")
+        else:
+            ts = arrs[0] if len(arrs) == 1 else np.concatenate(arrs)
+            iv = ts.astype("datetime64[ns]").view("int64")
+            iv = iv[iv != _NAT] // 1000  # drop NaT rows, ns → µs
         iv.sort()
         if state.exists:
             s0, l0, n0 = state.get

@@ -238,3 +238,20 @@ def test_q161_audit_structure(spark):
             assert not r.segment.startswith("MOVED-"), r
     # every multiplicity class realized
     assert {r.n_rows for r in inj.values()} == {2, 3, 4}
+
+
+def test_apply_scd2_empty_dim_equals_first_load(spark):
+    """An existing but empty dim takes the full-outer-join path; it
+    must produce exactly the first-insert rows the None path gives
+    (eff_start from created, open eff_end, current), same columns."""
+    batch = _df(
+        spark,
+        [(1, "a", "2024-01-01 00:00:00"), (2, "b", None)],
+        "id long, v string, created string",
+    ).withColumn("created", F.col("created").cast("timestamp"))
+    cfg = Scd2Config(key=["id"], attrs=["v"], created_col="created")
+    t0 = F.lit("2024-01-01 21:30:00").cast("timestamp")
+    first = apply_scd2(None, batch, cfg, t0)
+    from_empty = apply_scd2(first.limit(0), batch, cfg, t0)
+    assert from_empty.columns == first.columns
+    assert sorted(map(tuple, from_empty.collect())) == sorted(map(tuple, first.collect()))

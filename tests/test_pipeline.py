@@ -149,6 +149,54 @@ def test_all_entities_loaded(spark, loaded):
         assert wh.clean(name).read(spark).count() > 0, name
 
 
+def test_reported_row_counts_match_tables(spark, loaded):
+    """clean_rows/dim_rows are observed inside the write jobs; they
+    must equal a count() of the snapshot each day wrote (v=0 on day 1,
+    v=1 on the delta day)."""
+    wh, r1, r2, _ = loaded
+    for version, results in ((0, r1), (1, r2)):
+        for r in results:
+            e = r["entity"]
+            assert r["clean_rows"] == wh.clean(e).read(spark, version).count(), (e, version)
+            assert r["dim_rows"] == wh.dim(e).read(spark, version).count(), (e, version)
+
+
+def _jobs_during(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_read_runs_no_job_and_keeps_inferred_schema(spark, loaded, tmp_path):
+    """SnapshotTable.read takes the schema from the Parquet footer:
+    no schema-inference job, and the same schema inference gives —
+    for every clean and consumption table and for a 0-row write."""
+    from real_time_data_pipeline_for_restaurant_analytics_spark.sources.snapshot import (
+        SnapshotTable,
+    )
+
+    wh, *_ = loaded
+    empty = SnapshotTable(str(tmp_path), "empty")
+    empty.write(spark.createDataFrame([(1, "a")], "id long not null, v string").limit(0))
+    tables = [t for e in ENTITIES for t in (wh.clean(e), wh.dim(e))] + [empty]
+    for i, tbl in enumerate(tables):
+        df, jobs = _jobs_during(spark, f"snapshot-read-{i}", lambda: tbl.read(spark))
+        assert jobs == 0, (tbl.name, jobs)
+        path = tbl._path(tbl.latest_version())
+        inferred, infer_jobs = _jobs_during(
+            spark, f"snapshot-infer-{i}", lambda: spark.read.parquet(path)
+        )
+        assert infer_jobs > 0, "the job count must see schema inference"
+        assert df.schema == inferred.schema, tbl.name
+        _, jobs = _jobs_during(spark, f"snapshot-prev-{i}", lambda: tbl.read_previous(spark))
+        assert jobs == 0, (tbl.name, jobs)
+    assert empty.read(spark).count() == 0
+
+
 def test_date_path_contract():
     """O3/S8: `task_proc.sql:14-22` path layout — no zero padding."""
     from datetime import date

@@ -132,3 +132,16 @@ def test_emit_dtypes_stable_even_when_empty():
     assert str(df["session_end"].dtype) == "datetime64[us]"
     assert str(df["n_events"].dtype) == "int64"
     assert len(df) == 0
+
+
+def test_no_frames_for_live_key_keeps_state():
+    # an empty frame iterator on a key that has not timed out takes
+    # the empty-batch path instead of failing in np.concatenate([])
+    fn = _make_session_fn(GAP_MS, "ts")
+    st = FakeState((0, 60 * US, 2))
+    out = list(fn((7,), iter([]), st))
+    assert len(out) == 1 and len(out[0]) == 0
+    assert st.updated == (0, 60 * US, 2) and not st.removed
+    st = FakeState()
+    out = list(fn((7,), iter([]), st))
+    assert len(out) == 1 and len(out[0]) == 0 and st.updated is None
