@@ -244,18 +244,25 @@ def q161_duplicate_key_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     day2 = changed.unionByName(stale)
     # one agg job, not a count() plus a distinct().count() (guide
-    # §1.2); COUNT(DISTINCT) skips NULL keys, so it equals the
-    # distinct-key count only while customer_id (the c_custkey) is
-    # never NULL — the same agg counts NULL keys to pin that
-    s = day2.agg(
-        F.count(F.lit(1)).alias("n_raw"),
-        F.countDistinct(*key).alias("n_keys"),
-        F.count_if(F.col(key[0]).isNull()).alias("n_null_keys"),
-    ).collect()[0]
+    # §1.2). day2's filter drops NULL keys, so COUNT(DISTINCT) is its
+    # exact key count; day1 can still carry NULL keys into clean1, where
+    # no merge matches them and the audit would report them as
+    # duplicates no merge made — the same agg counts them over day1
+    in2 = F.col("in_day2")
+    s = (
+        day2.select(*key, F.lit(True).alias("in_day2"))
+        .unionByName(day1.select(*key, F.lit(False).alias("in_day2")))
+        .agg(
+            F.count_if(in2).alias("n_raw"),
+            F.countDistinct(F.when(in2, F.col(key[0]))).alias("n_keys"),
+            F.count_if(~in2 & F.col(key[0]).isNull()).alias("n_null_keys"),
+        )
+        .collect()[0]
+    )
     n_raw, n_keys = s["n_raw"], s["n_keys"]
     assert s["n_null_keys"] == 0, (
-        f"day-2 batch has {s['n_null_keys']} NULL customer_id row(s) — "
-        "COUNT(DISTINCT) would not count them as a key"
+        f"day-1 batch has {s['n_null_keys']} NULL customer_id row(s) — "
+        "the merge cannot match them and the audit would not be a key audit"
     )
     assert n_raw > n_keys, (
         f"day-2 batch has no physical in-batch duplicates "

@@ -30,8 +30,9 @@ written schema under ``org.apache.spark.sql.parquet.row.metadata``;
 read() takes the schema from there on the driver (pyarrow) and hands
 it to ``spark.read.schema(...)``, so Spark skips its schema-inference
 job. The result equals the inferred schema (Spark makes a file
-source's schema nullable either way). A version without the key falls
-back to inference.
+source's schema nullable either way). A version directory with no part
+file or no key raises, as ``spark.read.parquet`` raises on an empty
+directory.
 
 At 100 TB you would swap this class for Delta/Iceberg and keep every
 caller unchanged — the API (read/write/read_previous) is the contract.
@@ -55,11 +56,8 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     the schema comes from the footer of the first ``part-*`` file."""
     import pyarrow.parquet as pq
 
-    parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
-    meta = pq.read_metadata(os.path.join(path, parts[0])).metadata if parts else None
-    raw = (meta or {}).get(_SPARK_SCHEMA_KEY)
-    if raw is None:
-        return spark.read.parquet(path)
+    first = min(f for f in os.listdir(path) if f.startswith("part-"))
+    raw = pq.read_metadata(os.path.join(path, first)).metadata[_SPARK_SCHEMA_KEY]
     return spark.read.schema(StructType.fromJson(json.loads(raw))).parquet(path)
 
 
