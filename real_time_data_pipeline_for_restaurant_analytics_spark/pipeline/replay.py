@@ -1,11 +1,12 @@
-"""q145: the three-layer batch pipeline itself, replayed end to end
-and fully oracled (round-8 verdict item 1).
+"""The three-layer batch pipeline itself, replayed end to end and
+fully oracled: q145 (round-8 verdict item 1), q147, q155, q156 and
+q159 — together all ten reference entities.
 
 The reference's actual product is the daily CSV→stage→clean→SCD2-dim
 load (`with procedures/order_proc.sql:96-309`; SCD2 MERGE
 `02 Location Entity.sql:266-345`; replay fixtures `02:350-371`). Every
-piece of that chain is pytest-pinned, but until this query none of it
-produced a driver value-hash. q145 does for the batch pipeline what
+piece of that chain is pytest-pinned, but until these queries none of
+it produced a driver value-hash. Each does for the batch pipeline what
 q144 did for streaming: a DETERMINISTIC two-day drop replay —
 
   day 1  full snapshot        (keys k%10 ≠ 9)
@@ -29,17 +30,24 @@ q144 did for streaming: a DETERMINISTIC two-day drop replay —
                                skip; asserted in-query, a non-skip
                                raises)
 
-— through the real `run_all` fan-out (O2) for THREE entities:
-`location` (SCD2 + the full P3-P7 geography enrichment ladder), `menu`
-(SCD2 + trim/boolean/decimal casts P8/P9), and `login_audit` (the
-SCD1-only consumption FACT, C5, with the P13 device CASE, P14 datetime
-parts, and P15 smart keys; NULLs ride the format's `null_if` token) —
-with the other seven entity files absent (the fan-out's skip path).
-The warehouse dims/facts and clean tables are then read back as
-canonical digest rows and hash-checked against a DuckDB oracle that
-re-derives the same two CSV days from the `customer` table and replays
-every merge as CTEs (clean SCD1 upsert + dim SCD2 three-branch + SCD1
-fact), including the enrichment ladders in SQL.
+— through the real `run_all` fan-out (O2). One runner,
+:func:`_run_replay`, drives every query: it writes both days' drops,
+runs the three loads and raises on a wrong fan-out or a non-skipping
+rerun. A query names its entities by :class:`_Entity` records (the
+Spark drop rows and digest, plus the oracle's SQL for the same
+entity), and :func:`_replay_digest` reads the warehouse back from the
+same records. q145 replays `location` (SCD2 + the full P3-P7
+geography enrichment ladder), `menu` (SCD2 + trim/boolean/decimal
+casts P8/P9), and `login_audit` (the SCD1-only consumption FACT, C5,
+with the P13 device CASE, P14 datetime parts, and P15 smart keys;
+NULLs ride the format's `null_if` token); q147, q155, q156 and q159
+cover the other seven entities (see their sections). The entity files
+a query does not name are absent (the fan-out's skip path). The
+warehouse dims/facts and clean tables are then read back as canonical
+digest rows and hash-checked against a DuckDB oracle that re-derives
+the same two days from the `customer` table and replays every merge as
+CTEs (clean SCD1 upsert + dim SCD2 three-branch + SCD1 fact),
+including the enrichment ladders in SQL.
 
 Determinism notes:
 - source rows derive per-key from `c_custkey` (k); each day has unique
@@ -66,8 +74,9 @@ fixed per-merge job overhead, exactly like the reference's daily task.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
+from dataclasses import dataclass
+from functools import reduce
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,7 +84,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..operators.merge import apply_deletes, change_feed
 from ..registry import register
-from ..workdirs import replay_workdir
+from ..workdirs import replay_workdir, write_drops
 from . import geography as geo
 
 # deterministic value pools — STATES is every mapped state (includes
@@ -120,17 +129,6 @@ def _replay_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey")
         .filter(F.col("c_custkey") < _DAY_KEYS_CAP)
     )
-
-
-def _parallel_drops(writes: list) -> None:
-    """Run the per-entity-per-day drop writes concurrently: each is an
-    independent coalesce(1) CSV/JSON job into its own scratch dir, and
-    the Spark scheduler overlaps concurrent actions — the drop phase
-    costs one job's wall instead of four (round-12 verdict item 1)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(len(writes), 8)) as pool:
-        list(pool.map(lambda w: w(), writes))
 
 
 def _pick(values: list[str], k: Column, n: int) -> Column:
@@ -232,18 +230,6 @@ def _login_src(cust: DataFrame, day: int) -> DataFrame:
     )
 
 
-def _write_drop_csv(frame: DataFrame, dst: str, scratch: str) -> None:
-    """One CSV FILE per entity per day (the `YYYY/M/D/<entity>.csv`
-    contract, S8): write to a scratch dir, move the single part file
-    into place."""
-    tmp = os.path.join(scratch, "w_" + uuid.uuid4().hex)
-    frame.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
-    part = next(f for f in sorted(os.listdir(tmp)) if f.endswith(".csv"))
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    os.replace(os.path.join(tmp, part), dst)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
 def _loc_digest() -> Column:
     return F.md5(
         F.concat_ws(
@@ -333,6 +319,93 @@ def _digest_rows(
         eff_e.alias("eff_end_day"),
         cur.alias("is_current"),
         digest.alias("digest"),
+    )
+
+
+@dataclass(frozen=True)
+class _Entity:
+    """One entity of a batch replay, with both independent sides of
+    its oracle check.
+
+    Spark side: ``entity`` names the ENTITIES spec, whose source file
+    stem and extension pick the drop file and its format;
+    ``src(cust, day)`` builds the day's drop rows; ``digest()`` is the
+    payload md5 over the warehouse tables, which digest under the
+    layer labels ``dim_layer`` (login_audit's consumption table is a
+    FACT) and ``clean``. SQL side: the oracle's CTE prefix ``cte``,
+    ``src_sql(day)``, ``clean_sql(src_cte)``, ``digest_sql`` and the
+    columns ``cols`` the merge chain replays (login_audit replays one
+    final-state CTE instead, so it names none).
+    """
+
+    entity: str
+    key: str | list[str]
+    src: Callable[[DataFrame, int], DataFrame]
+    digest: Callable[[], Column]
+    cte: str
+    src_sql: Callable[[int], str]
+    clean_sql: Callable[[str], str]
+    digest_sql: str
+    cols: Sequence[str] = ()
+    dim_layer: str = "dim"
+
+
+def _run_replay(
+    spark: SparkSession, sf_dir: str, name: str, family: str, ents: list[_Entity]
+) -> tuple:
+    """Write both days' drops for ``ents``, then load day 1, day 2 and
+    day 2 AGAIN through the real ``run_all`` fan-out into a fresh
+    warehouse under ``replay_workdir(family)``. Returns the warehouse
+    and the key frame the drops derive from (reusing it saves the
+    parquet schema-inference job a second load would cost). Raises
+    (naming query ``name``) when a day's fan-out loads any other
+    entity set, or when the rerun is not a ledger no-op."""
+    from ..sources.paths import entity_file
+    from .entities import ENTITIES
+    from .runner import Warehouse, run_all
+
+    work = replay_workdir(family)
+    cust = _replay_keys(spark, sf_dir)
+    day_dirs = [os.path.join(work, "drops", "2024", "6", str(d)) for d in (1, 2)]
+    write_drops(work, [
+        (e.src(cust, day),
+         entity_file(ddir, ENTITIES[e.entity].source_file_stem, ENTITIES[e.entity].ext))
+        for day, ddir in zip((1, 2), day_dirs)
+        for e in ents
+    ])
+
+    wh = Warehouse(os.path.join(work, "wh"))
+    expected = {e.entity for e in ents}
+    # the third load reruns day 2's files: the ledger must skip every
+    # entity — the different batch_ts would otherwise stamp visible
+    # SCD2 churn
+    loads = ((day_dirs[0], _TS1), (day_dirs[1], _TS2), (day_dirs[1], _TS3))
+    for day, (ddir, ts) in enumerate(loads, 1):
+        res = run_all(spark, wh, ddir, batch_ts=F.lit(ts).cast("timestamp"),
+                      checkpoint="fork", parallel=True)
+        loaded = [r["entity"] for r in res if not r["skipped"]]
+        if day == 3 and loaded:
+            raise RuntimeError(
+                f"{name}: day-2 rerun re-processed {loaded} — "
+                "the ledger's exactly-once contract is broken"
+            )
+        if day < 3 and set(loaded) != expected:
+            raise RuntimeError(
+                f"{name}: day-{day} fan-out loaded {set(loaded)}, "
+                f"expected exactly {expected}"
+            )
+    return wh, cust
+
+
+def _replay_digest(spark: SparkSession, wh, ents: list[_Entity]) -> DataFrame:
+    """Every entity's consumption and clean table as digest rows."""
+    parts = [
+        _digest_rows(table.read(spark), e.entity, layer, e.key, e.digest())
+        for e in ents
+        for table, layer in ((wh.dim(e.entity), e.dim_layer), (wh.clean(e.entity), "clean"))
+    ]
+    return reduce(DataFrame.unionByName, parts).orderBy(
+        "entity", "layer", "key_str", "eff_start_day"
     )
 
 
@@ -637,26 +710,44 @@ def _digest_rows_sql(
         f"CAST(COALESCE(date_diff('day', DATE '{_BASE_DATE}', "
         f"CAST(eff_end_date AS DATE)), {_NO_DATE}) AS BIGINT)"
     )
-    if not isinstance(key, str):  # composite key: '~'-joined, as in _digest_rows
-        key = "concat_ws('~', " + ", ".join(f"CAST({k} AS VARCHAR)" for k in key) + ")"
-        return f"""SELECT '{entity}' AS entity, 'dim' AS layer,
-       {key} AS key_str,
-       {eff_s} AS eff_start_day, {eff_e} AS eff_end_day,
-       is_current, {digest} AS digest
-  FROM {dim_table}
-UNION ALL
-SELECT '{entity}', 'clean', {key},
-       CAST({_NO_DATE} AS BIGINT), CAST({_NO_DATE} AS BIGINT), TRUE, {digest}
-  FROM {clean_table}"""
+    if isinstance(key, str):
+        key_str = f"CAST({key} AS VARCHAR)"
+    else:  # composite key: '~'-joined, as in _digest_rows
+        key_str = "concat_ws('~', " + ", ".join(f"CAST({k} AS VARCHAR)" for k in key) + ")"
     return f"""SELECT '{entity}' AS entity, 'dim' AS layer,
-       CAST({key} AS VARCHAR) AS key_str,
+       {key_str} AS key_str,
        {eff_s} AS eff_start_day, {eff_e} AS eff_end_day,
        is_current, {digest} AS digest
   FROM {dim_table}
 UNION ALL
-SELECT '{entity}', 'clean', CAST({key} AS VARCHAR),
+SELECT '{entity}', 'clean', {key_str},
        CAST({_NO_DATE} AS BIGINT), CAST({_NO_DATE} AS BIGINT), TRUE, {digest}
   FROM {clean_table}"""
+
+
+def _src_clean_ctes(e: _Entity) -> str:
+    p = e.cte
+    return f"""{p}_src1 AS ({e.src_sql(1)}),
+{p}_src2 AS ({e.src_sql(2)}),
+{p}_clean1 AS ({e.clean_sql(p + '_src1')}),
+{p}_clean2 AS ({e.clean_sql(p + '_src2')})"""
+
+
+def _entity_ctes(e: _Entity) -> str:
+    """The entity's two source days, two clean days and merge chain."""
+    return f"{_src_clean_ctes(e)},\n{_merge_replay_sql(e.cte, e.key, e.cols)}"
+
+
+def _pair_oracle(a: _Entity, b: _Entity) -> str:
+    """The oracle of a two-entity replay (q155/q156/q159)."""
+    return f"""WITH {_KS_SQL},
+{_entity_ctes(a)},
+{_entity_ctes(b)}
+SELECT * FROM (
+{_digest_rows_sql(a.cte, a.entity, a.key, a.digest_sql)}
+UNION ALL
+{_digest_rows_sql(b.cte, b.entity, b.key, b.digest_sql)}
+) ORDER BY entity, layer, key_str, eff_start_day"""
 
 
 _LOC_COLS = [
@@ -701,21 +792,19 @@ _LOGIN_ROWS_SQL = f"""SELECT 'login_audit' AS entity, lyr.l AS layer,
        TRUE AS is_current, {_LOGIN_DIGEST_SQL} AS digest
   FROM la_final, (SELECT unnest(['clean', 'fact']) AS l) lyr"""
 
+_LOC = _Entity("location", "location_id", _location_src, _loc_digest, "loc",
+               _loc_src_sql, _loc_clean_sql, _LOC_DIGEST_SQL, _LOC_COLS)
+_MENU = _Entity("menu", "menu_id", _menu_src, _menu_digest, "menu",
+                _menu_src_sql, _menu_clean_sql, _MENU_DIGEST_SQL, _MENU_COLS)
+_LOGIN = _Entity("login_audit", "login_id", _login_src, _login_digest, "la",
+                 _login_src_sql, _login_clean_sql, _LOGIN_DIGEST_SQL,
+                 dim_layer="fact")
+_Q145 = [_LOC, _MENU, _LOGIN]
+
 _REPLAY_ORACLE = f"""WITH {_KS_SQL},
-loc_src1 AS ({_loc_src_sql(1)}),
-loc_src2 AS ({_loc_src_sql(2)}),
-loc_clean1 AS ({_loc_clean_sql('loc_src1')}),
-loc_clean2 AS ({_loc_clean_sql('loc_src2')}),
-{_merge_replay_sql('loc', 'location_id', _LOC_COLS)},
-menu_src1 AS ({_menu_src_sql(1)}),
-menu_src2 AS ({_menu_src_sql(2)}),
-menu_clean1 AS ({_menu_clean_sql('menu_src1')}),
-menu_clean2 AS ({_menu_clean_sql('menu_src2')}),
-{_merge_replay_sql('menu', 'menu_id', _MENU_COLS)},
-la_src1 AS ({_login_src_sql(1)}),
-la_src2 AS ({_login_src_sql(2)}),
-la_clean1 AS ({_login_clean_sql('la_src1')}),
-la_clean2 AS ({_login_clean_sql('la_src2')}),
+{_entity_ctes(_LOC)},
+{_entity_ctes(_MENU)},
+{_src_clean_ctes(_LOGIN)},
 {_LOGIN_FINAL_SQL}
 SELECT * FROM (
 {_digest_rows_sql('loc', 'location', 'location_id', _LOC_DIGEST_SQL)}
@@ -750,62 +839,8 @@ UNION ALL
     "`02 Location Entity.sql:266-345`, replay fixtures `02:350-371`.",
 )
 def q145_pipeline_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.paths import entity_file
-    from .entities import ENTITIES
-    from .runner import Warehouse, run_all
-
-    work = replay_workdir("pipeline_replay")
-    cust = _replay_keys(spark, sf_dir)
-    day_dirs = (os.path.join(work, "drops", "2024", "6", "1"),
-                os.path.join(work, "drops", "2024", "6", "2"))
-    _parallel_drops([
-        (lambda d=day, dd=ddir, src=src, ent=ent: _write_drop_csv(
-            src(cust, d), entity_file(dd, ENTITIES[ent].source_file_stem), work))
-        for day, ddir in ((1, day_dirs[0]), (2, day_dirs[1]))
-        for src, ent in ((_location_src, "location"), (_menu_src, "menu"),
-                         (_login_src, "login_audit"))
-    ])
-
-    wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    for res, day in ((r1, 1), (r2, 2)):
-        loaded = {r["entity"] for r in res if not r["skipped"]}
-        if loaded != {"location", "menu", "login_audit"}:
-            raise RuntimeError(
-                f"q145_pipeline_replay: day-{day} fan-out loaded {loaded}, "
-                "expected exactly {'location', 'menu', 'login_audit'}"
-            )
-    # rerun idempotence: same files, ledger must skip every entity —
-    # the different batch_ts would otherwise stamp visible SCD2 churn
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
-    if not_skipped:
-        raise RuntimeError(
-            f"q145_pipeline_replay: day-2 rerun re-processed {not_skipped} — "
-            "the ledger's exactly-once contract is broken"
-        )
-
-    out = (
-        _digest_rows(wh.dim("location").read(spark), "location", "dim",
-                     "location_id", _loc_digest())
-        .unionByName(_digest_rows(wh.clean("location").read(spark), "location",
-                                  "clean", "location_id", _loc_digest()))
-        .unionByName(_digest_rows(wh.dim("menu").read(spark), "menu", "dim",
-                                  "menu_id", _menu_digest()))
-        .unionByName(_digest_rows(wh.clean("menu").read(spark), "menu", "clean",
-                                  "menu_id", _menu_digest()))
-        .unionByName(_digest_rows(wh.clean("login_audit").read(spark),
-                                  "login_audit", "clean", "login_id",
-                                  _login_digest()))
-        .unionByName(_digest_rows(wh.dim("login_audit").read(spark),
-                                  "login_audit", "fact", "login_id",
-                                  _login_digest()))
-    )
-    return out.orderBy("entity", "layer", "key_str", "eff_start_day")
+    wh, _ = _run_replay(spark, sf_dir, "q145_pipeline_replay", "pipeline_replay", _Q145)
+    return _replay_digest(spark, wh, _Q145)
 
 
 # ---------------------------------------------------------------------------
@@ -875,17 +910,6 @@ def _da_src(cust: DataFrame, day: int) -> DataFrame:
 
     # the C6 fixture: every k%4==0 row appears TWICE in the drop file
     return sel(df).unionByName(sel(df.filter(k % 4 == 0)))
-
-
-def _write_drop_json(frame: DataFrame, dst: str, scratch: str) -> None:
-    """One JSON FILE per entity per day (S8), same move as
-    :func:`_write_drop_csv` for the CSV legs."""
-    tmp = os.path.join(scratch, "w_" + uuid.uuid4().hex)
-    frame.coalesce(1).write.mode("overwrite").json(tmp)
-    part = next(f for f in sorted(os.listdir(tmp)) if f.endswith(".json"))
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    os.replace(os.path.join(tmp, part), dst)
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _da_digest() -> Column:
@@ -980,12 +1004,11 @@ _DA_PRUNE_CLASSES = (2, 5)
 _TS_PRUNE = "2024-06-03 12:00:00"
 _PRUNE_IN = ", ".join(str(c) for c in _DA_PRUNE_CLASSES)
 
+_DA = _Entity("delivery_agent", "delivery_agent_id", _da_src, _da_digest, "da",
+              _da_src_sql, _da_clean_sql, _DA_DIGEST_SQL, _DA_COLS)
+
 _DA_REPLAY_ORACLE = f"""WITH {_KS_SQL},
-da_src1 AS ({_da_src_sql(1)}),
-da_src2 AS ({_da_src_sql(2)}),
-da_clean1 AS ({_da_clean_sql('da_src1')}),
-da_clean2 AS ({_da_clean_sql('da_src2')}),
-{_merge_replay_sql('da', 'delivery_agent_id', _DA_COLS)},
+{_entity_ctes(_DA)},
 da_cleanP AS (
   SELECT * FROM da_cleanF WHERE delivery_agent_id % 10 NOT IN ({_PRUNE_IN})
 ),
@@ -1029,41 +1052,7 @@ SELECT * FROM (
     "`with procedures/delivery_agent_proc.sql:98-154`.",
 )
 def q147_json_entity_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.paths import entity_file
-    from .entities import ENTITIES
-    from .runner import Warehouse, run_all
-
-    spec = ENTITIES["delivery_agent"]
-    work = replay_workdir("json_replay")
-    cust = _replay_keys(spark, sf_dir)
-    day_dirs = (os.path.join(work, "drops", "2024", "6", "1"),
-                os.path.join(work, "drops", "2024", "6", "2"))
-    _parallel_drops([
-        (lambda d=day, dd=ddir: _write_drop_json(
-            _da_src(cust, d), entity_file(dd, spec.source_file_stem, spec.ext), work))
-        for day, ddir in ((1, day_dirs[0]), (2, day_dirs[1]))
-    ])
-
-    wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    for res, day in ((r1, 1), (r2, 2)):
-        loaded = {r["entity"] for r in res if not r["skipped"]}
-        if loaded != {"delivery_agent"}:
-            raise RuntimeError(
-                f"q147_json_entity_replay: day-{day} fan-out loaded "
-                f"{loaded}, expected exactly {{'delivery_agent'}}"
-            )
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
-    if not_skipped:
-        raise RuntimeError(
-            f"q147_json_entity_replay: day-2 rerun re-processed "
-            f"{not_skipped} — the ledger's exactly-once contract is broken"
-        )
+    wh, cust = _run_replay(spark, sf_dir, "q147_json_entity_replay", "json_replay", [_DA])
 
     # the duplicates must have PHYSICALLY reached the stage layer —
     # otherwise "dedup collapsed them" proves nothing about C6.
@@ -1114,14 +1103,7 @@ def q147_json_entity_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    out = (
-        _digest_rows(wh.dim("delivery_agent").read(spark), "delivery_agent",
-                     "dim", "delivery_agent_id", _da_digest())
-        .unionByName(_digest_rows(wh.clean("delivery_agent").read(spark),
-                                  "delivery_agent", "clean",
-                                  "delivery_agent_id", _da_digest()))
-    )
-    return out.orderBy("entity", "layer", "key_str", "eff_start_day")
+    return _replay_digest(spark, wh, [_DA])
 
 
 # ---------------------------------------------------------------------------
@@ -1413,22 +1395,12 @@ _OI_DIGEST_SQL = (
     "CAST(epoch_us(modified_ts) AS VARCHAR)))"
 )
 
-_ORDER_PAIR_ORACLE = f"""WITH {_KS_SQL},
-ord_src1 AS ({_orders_src_sql(1)}),
-ord_src2 AS ({_orders_src_sql(2)}),
-ord_clean1 AS ({_orders_clean_sql('ord_src1')}),
-ord_clean2 AS ({_orders_clean_sql('ord_src2')}),
-{_merge_replay_sql('ord', 'order_id', _ORD_COLS)},
-oi_src1 AS ({_order_item_src_sql(1)}),
-oi_src2 AS ({_order_item_src_sql(2)}),
-oi_clean1 AS ({_order_item_clean_sql('oi_src1')}),
-oi_clean2 AS ({_order_item_clean_sql('oi_src2')}),
-{_merge_replay_sql('oi', _OI_KEY, _OI_COLS)}
-SELECT * FROM (
-{_digest_rows_sql('ord', 'orders', 'order_id', _ORD_DIGEST_SQL)}
-UNION ALL
-{_digest_rows_sql('oi', 'order_item', _OI_KEY, _OI_DIGEST_SQL)}
-) ORDER BY entity, layer, key_str, eff_start_day"""
+_ORD = _Entity("orders", "order_id", _orders_src, _orders_digest, "ord",
+               _orders_src_sql, _orders_clean_sql, _ORD_DIGEST_SQL, _ORD_COLS)
+_OI = _Entity("order_item", _OI_KEY, _order_item_src, _order_item_digest, "oi",
+              _order_item_src_sql, _order_item_clean_sql, _OI_DIGEST_SQL, _OI_COLS)
+_Q155 = [_ORD, _OI]
+_ORDER_PAIR_ORACLE = _pair_oracle(*_Q155)
 
 
 @register(
@@ -1453,55 +1425,8 @@ UNION ALL
     "(asserted in-query).",
 )
 def q155_order_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.paths import entity_file
-    from .entities import ENTITIES
-    from .runner import Warehouse, run_all
-
-    work = replay_workdir("order_pair_replay")
-    cust = _replay_keys(spark, sf_dir)
-    day_dirs = (os.path.join(work, "drops", "2024", "6", "1"),
-                os.path.join(work, "drops", "2024", "6", "2"))
-    _parallel_drops([
-        (lambda d=day, dd=ddir, src=src, ent=ent: _write_drop_csv(
-            src(cust, d), entity_file(dd, ENTITIES[ent].source_file_stem), work))
-        for day, ddir in ((1, day_dirs[0]), (2, day_dirs[1]))
-        for src, ent in ((_orders_src, "orders"), (_order_item_src, "order_item"))
-    ])
-
-    wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    for res, day in ((r1, 1), (r2, 2)):
-        loaded = {r["entity"] for r in res if not r["skipped"]}
-        if loaded != {"orders", "order_item"}:
-            raise RuntimeError(
-                f"q155_order_pair_replay: day-{day} fan-out loaded {loaded}, "
-                "expected exactly {'orders', 'order_item'}"
-            )
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
-    if not_skipped:
-        raise RuntimeError(
-            f"q155_order_pair_replay: day-2 rerun re-processed {not_skipped} "
-            "— the ledger's exactly-once contract is broken"
-        )
-
-    out = (
-        _digest_rows(wh.dim("orders").read(spark), "orders", "dim",
-                     "order_id", _orders_digest())
-        .unionByName(_digest_rows(wh.clean("orders").read(spark), "orders",
-                                  "clean", "order_id", _orders_digest()))
-        .unionByName(_digest_rows(wh.dim("order_item").read(spark),
-                                  "order_item", "dim", _OI_KEY,
-                                  _order_item_digest()))
-        .unionByName(_digest_rows(wh.clean("order_item").read(spark),
-                                  "order_item", "clean", _OI_KEY,
-                                  _order_item_digest()))
-    )
-    return out.orderBy("entity", "layer", "key_str", "eff_start_day")
+    wh, _ = _run_replay(spark, sf_dir, "q155_order_pair_replay", "order_pair_replay", _Q155)
+    return _replay_digest(spark, wh, _Q155)
 
 
 # ---------------------------------------------------------------------------
@@ -1809,22 +1734,12 @@ _ADDR_DIGEST_SQL = (
     "CAST(epoch_us(modified_ts) AS VARCHAR)))"
 )
 
-_CUSTOMER_PAIR_ORACLE = f"""WITH {_KS_SQL},
-cu_src1 AS ({_customer_src_sql(1)}),
-cu_src2 AS ({_customer_src_sql(2)}),
-cu_clean1 AS ({_customer_clean_sql('cu_src1')}),
-cu_clean2 AS ({_customer_clean_sql('cu_src2')}),
-{_merge_replay_sql('cu', 'customer_id', _CUST_COLS)},
-ad_src1 AS ({_address_src_sql(1)}),
-ad_src2 AS ({_address_src_sql(2)}),
-ad_clean1 AS ({_address_clean_sql('ad_src1')}),
-ad_clean2 AS ({_address_clean_sql('ad_src2')}),
-{_merge_replay_sql('ad', 'address_id', _ADDR_COLS)}
-SELECT * FROM (
-{_digest_rows_sql('cu', 'customer', 'customer_id', _CUST_DIGEST_SQL)}
-UNION ALL
-{_digest_rows_sql('ad', 'customer_address', 'address_id', _ADDR_DIGEST_SQL)}
-) ORDER BY entity, layer, key_str, eff_start_day"""
+_CUST = _Entity("customer", "customer_id", _customer_src, _customer_digest, "cu",
+                _customer_src_sql, _customer_clean_sql, _CUST_DIGEST_SQL, _CUST_COLS)
+_ADDR = _Entity("customer_address", "address_id", _address_src, _address_digest, "ad",
+                _address_src_sql, _address_clean_sql, _ADDR_DIGEST_SQL, _ADDR_COLS)
+_Q156 = [_CUST, _ADDR]
+_CUSTOMER_PAIR_ORACLE = _pair_oracle(*_Q156)
 
 
 @register(
@@ -1850,55 +1765,8 @@ UNION ALL
     "rerun-idempotence assertion as q145.",
 )
 def q156_customer_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.paths import entity_file
-    from .entities import ENTITIES
-    from .runner import Warehouse, run_all
-
-    work = replay_workdir("customer_pair_replay")
-    cust = _replay_keys(spark, sf_dir)
-    day_dirs = (os.path.join(work, "drops", "2024", "6", "1"),
-                os.path.join(work, "drops", "2024", "6", "2"))
-    _parallel_drops([
-        (lambda d=day, dd=ddir, src=src, ent=ent: _write_drop_csv(
-            src(cust, d), entity_file(dd, ENTITIES[ent].source_file_stem), work))
-        for day, ddir in ((1, day_dirs[0]), (2, day_dirs[1]))
-        for src, ent in ((_customer_src, "customer"), (_address_src, "customer_address"))
-    ])
-
-    wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    for res, day in ((r1, 1), (r2, 2)):
-        loaded = {r["entity"] for r in res if not r["skipped"]}
-        if loaded != {"customer", "customer_address"}:
-            raise RuntimeError(
-                f"q156_customer_pair_replay: day-{day} fan-out loaded "
-                f"{loaded}, expected exactly {{'customer', 'customer_address'}}"
-            )
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
-    if not_skipped:
-        raise RuntimeError(
-            f"q156_customer_pair_replay: day-2 rerun re-processed "
-            f"{not_skipped} — the ledger's exactly-once contract is broken"
-        )
-
-    out = (
-        _digest_rows(wh.dim("customer").read(spark), "customer", "dim",
-                     "customer_id", _customer_digest())
-        .unionByName(_digest_rows(wh.clean("customer").read(spark), "customer",
-                                  "clean", "customer_id", _customer_digest()))
-        .unionByName(_digest_rows(wh.dim("customer_address").read(spark),
-                                  "customer_address", "dim", "address_id",
-                                  _address_digest()))
-        .unionByName(_digest_rows(wh.clean("customer_address").read(spark),
-                                  "customer_address", "clean", "address_id",
-                                  _address_digest()))
-    )
-    return out.orderBy("entity", "layer", "key_str", "eff_start_day")
+    wh, _ = _run_replay(spark, sf_dir, "q156_customer_pair_replay", "customer_pair_replay", _Q156)
+    return _replay_digest(spark, wh, _Q156)
 
 
 # ---------------------------------------------------------------------------
@@ -2186,22 +2054,12 @@ _DLV_DIGEST_SQL = (
     "CAST(epoch_us(modified_ts) AS VARCHAR)))"
 )
 
-_REST_PAIR_ORACLE = f"""WITH {_KS_SQL},
-re_src1 AS ({_restaurant_src_sql(1)}),
-re_src2 AS ({_restaurant_src_sql(2)}),
-re_clean1 AS ({_restaurant_clean_sql('re_src1')}),
-re_clean2 AS ({_restaurant_clean_sql('re_src2')}),
-{_merge_replay_sql('re', 'restaurant_id', _REST_COLS)},
-dl_src1 AS ({_delivery_src_sql(1)}),
-dl_src2 AS ({_delivery_src_sql(2)}),
-dl_clean1 AS ({_delivery_clean_sql('dl_src1')}),
-dl_clean2 AS ({_delivery_clean_sql('dl_src2')}),
-{_merge_replay_sql('dl', _DLV_KEY, _DLV_COLS)}
-SELECT * FROM (
-{_digest_rows_sql('re', 'restaurant', 'restaurant_id', _REST_DIGEST_SQL)}
-UNION ALL
-{_digest_rows_sql('dl', 'delivery', _DLV_KEY, _DLV_DIGEST_SQL)}
-) ORDER BY entity, layer, key_str, eff_start_day"""
+_REST = _Entity("restaurant", "restaurant_id", _restaurant_src, _restaurant_digest, "re",
+                _restaurant_src_sql, _restaurant_clean_sql, _REST_DIGEST_SQL, _REST_COLS)
+_DLV = _Entity("delivery", _DLV_KEY, _delivery_src, _delivery_digest, "dl",
+               _delivery_src_sql, _delivery_clean_sql, _DLV_DIGEST_SQL, _DLV_COLS)
+_Q159 = [_REST, _DLV]
+_REST_PAIR_ORACLE = _pair_oracle(*_Q159)
 
 
 @register(
@@ -2223,51 +2081,5 @@ UNION ALL
     "ledger rerun-idempotence assertion as q145.",
 )
 def q159_restaurant_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.paths import entity_file
-    from .entities import ENTITIES
-    from .runner import Warehouse, run_all
-
-    work = replay_workdir("restaurant_pair_replay")
-    cust = _replay_keys(spark, sf_dir)
-    day_dirs = (os.path.join(work, "drops", "2024", "6", "1"),
-                os.path.join(work, "drops", "2024", "6", "2"))
-    _parallel_drops([
-        (lambda d=day, dd=ddir, src=src, ent=ent: _write_drop_csv(
-            src(cust, d), entity_file(dd, ENTITIES[ent].source_file_stem), work))
-        for day, ddir in ((1, day_dirs[0]), (2, day_dirs[1]))
-        for src, ent in ((_restaurant_src, "restaurant"), (_delivery_src, "delivery"))
-    ])
-
-    wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    for res, day in ((r1, 1), (r2, 2)):
-        loaded = {r["entity"] for r in res if not r["skipped"]}
-        if loaded != {"restaurant", "delivery"}:
-            raise RuntimeError(
-                f"q159_restaurant_pair_replay: day-{day} fan-out loaded "
-                f"{loaded}, expected exactly {{'restaurant', 'delivery'}}"
-            )
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 checkpoint="fork", parallel=True)
-    not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
-    if not_skipped:
-        raise RuntimeError(
-            f"q159_restaurant_pair_replay: day-2 rerun re-processed "
-            f"{not_skipped} — the ledger's exactly-once contract is broken"
-        )
-
-    out = (
-        _digest_rows(wh.dim("restaurant").read(spark), "restaurant", "dim",
-                     "restaurant_id", _restaurant_digest())
-        .unionByName(_digest_rows(wh.clean("restaurant").read(spark),
-                                  "restaurant", "clean", "restaurant_id",
-                                  _restaurant_digest()))
-        .unionByName(_digest_rows(wh.dim("delivery").read(spark), "delivery",
-                                  "dim", _DLV_KEY, _delivery_digest()))
-        .unionByName(_digest_rows(wh.clean("delivery").read(spark), "delivery",
-                                  "clean", _DLV_KEY, _delivery_digest()))
-    )
-    return out.orderBy("entity", "layer", "key_str", "eff_start_day")
+    wh, _ = _run_replay(spark, sf_dir, "q159_restaurant_pair_replay", "restaurant_pair_replay", _Q159)
+    return _replay_digest(spark, wh, _Q159)

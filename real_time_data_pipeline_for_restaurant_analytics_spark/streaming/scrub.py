@@ -53,6 +53,8 @@ from ..operators.dedup import (
 )
 from ..catalog import load
 from ..registry import register
+from ..workdirs import replay_workdir, write_drops
+from .windows import await_drain
 
 DOC_SCHEMA = "doc_id long, text string"
 
@@ -201,9 +203,6 @@ _REPLAY_ORACLE = (
     "idempotent sinks.",
 )
 def q144_streaming_scrub_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    from ..workdirs import replay_workdir
-
     # scratch OUTSIDE the repo tree ($SPARK_GRAFT_TMPDIR or the system
     # tempdir, age-based cleanup — verdict r8 item 7); the returned
     # DataFrame lazily reads this run's parquet, so the dir outlives
@@ -220,10 +219,12 @@ def q144_streaming_scrub_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one JSON file per drop + pinned mtimes: the file source orders
     # micro-batches by modification time, so each drop is exactly one
     # batch and drop 0 always precedes drop 1 (drops written
-    # concurrently — see _write_json_drops)
-    from .windows import _write_json_drops
-
-    _write_json_drops(work, [(landing, i, f) for i, f in enumerate(drops)])
+    # concurrently — see write_drops)
+    write_drops(
+        work,
+        [(f, os.path.join(landing, f"drop{i}.json")) for i, f in enumerate(drops)],
+        ordered=True,
+    )
 
     q = scrub_stream(
         spark,
@@ -232,12 +233,7 @@ def q144_streaming_scrub_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(work, "index"),
         os.path.join(work, "ckpt"),
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(
-            "q144_streaming_scrub_replay: availableNow drain did not "
-            "finish within 600 s"
-        )
+    await_drain(q, "q144_streaming_scrub_replay")
     return (
         spark.read.parquet(os.path.join(work, "clean"))
         .select(

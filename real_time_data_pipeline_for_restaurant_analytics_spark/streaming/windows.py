@@ -8,18 +8,22 @@
   assigning gap-based sessions per user — the pattern the reference
   cannot express at all; included as the stateful-streaming
   capability a Spark-first engine adds (north-star in BASELINE.json).
+- the registered streaming replays q164/q165/q167/q169/q170/q172:
+  each writes its drops with ``workdirs.write_drops``, reads them back
+  through ``_json_stream`` and runs through the one ``drain`` (q144's
+  foreachBatch loop in ``scrub.py`` shares its ``await_drain``).
 """
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..registry import register
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
@@ -28,42 +32,80 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..catalog import load
+from ..registry import register
+from ..workdirs import replay_workdir, write_drops
 
-def _write_json_drops(work: str, plan: list) -> None:
-    """Materialize replay drop files CONCURRENTLY (guide §2.6: each is
-    an independent coalesce(1) JSON job into its own scratch dir, and
-    the scheduler overlaps concurrent actions — the drop phase costs
-    roughly one job's wall instead of len(plan); the q145
-    ``_parallel_drops`` recipe applied to the streaming replays, which
-    wrote their 2-6 drops serially until round 14).
 
-    A parallel encode (repartition + part-file concat) was measured
-    here in round 14 and REJECTED: with the q169 sentinel fixed to a
-    JVM relation the single-task coalesce(1) encode of a 1-2 MB drop is
-    ~0.3 s, and the repartition's extra exchange cost more than the
-    encode parallelism saved on every replay in the family (A/B:
-    bench_logs/qprof_stream_{w2,par1}.txt).
+_NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
+_PARTS = "spark.sql.shuffle.partitions"
+_DRAIN_TIMEOUT_S = 600
 
-    ``plan`` rows are ``(landing_dir, batch_index, frame)``; the
-    explicit mtime stamp (base + index) keeps the file-source
-    micro-batch ORDER independent of write completion order.
+
+def _json_stream(spark: SparkSession, landing: str, schema: str) -> DataFrame:
+    """The replays' file source: one micro-batch per drop file."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .json(landing)
+    )
+
+
+def _drops(landing: str, frames) -> list:
+    """``write_drops`` plan rows: frame i lands as ``drop{i}.json``."""
+    return [(f, os.path.join(landing, f"drop{i}.json")) for i, f in enumerate(frames)]
+
+
+def await_drain(q: StreamingQuery, name: str) -> None:
+    """Wait for an ``availableNow`` query to drain; if it has not
+    within 600 s, stop it and raise naming the replay ``name``."""
+    if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+        q.stop()
+        raise RuntimeError(
+            f"{name}: availableNow drain did not finish within "
+            f"{_DRAIN_TIMEOUT_S} s"
+        )
+
+
+def drain(
+    stream: DataFrame, work: str, name: str, conf: dict[str, str] | None = None
+) -> str:
+    """Drain ``stream`` with ``availableNow`` into an append-mode
+    parquet sink at ``<work>/sink`` (checkpoint ``<work>/ckpt``) and
+    return the sink directory.
+
+    ``conf`` is set on the session only around ``start()`` and the
+    caller's values (or their unset state) are restored in ``finally``:
+    a streaming query pins its plan-relevant conf when it starts
+    (``offsets/0`` records ``spark.sql.shuffle.partitions``, and the
+    no-data-batch switch is read from the query's own session clone),
+    so nothing after ``start()`` needs the override. A query started
+    concurrently on the same session DURING ``start()`` would still
+    inherit it; the replays run one at a time.
     """
-    import os
-    import shutil
-    import uuid
-    from concurrent.futures import ThreadPoolExecutor
-
-    def one(landing: str, i: int, frame: DataFrame) -> None:
-        tmp = os.path.join(work, "w_" + uuid.uuid4().hex)
-        frame.coalesce(1).write.mode("overwrite").json(tmp)
-        src = next(f for f in sorted(os.listdir(tmp)) if f.endswith(".json"))
-        dst = os.path.join(landing, f"drop{i}.json")
-        os.replace(os.path.join(tmp, src), dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    with ThreadPoolExecutor(max_workers=min(len(plan), 8)) as pool:
-        list(pool.map(lambda a: one(*a), plan))
+    out_dir = os.path.join(work, "sink")
+    writer = (
+        stream.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+    )
+    conf = conf or {}
+    session_conf = stream.sparkSession.conf
+    prev = {k: session_conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            session_conf.set(k, v)
+        q = writer.start()
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                session_conf.unset(k)
+            else:
+                session_conf.set(k, v)
+    await_drain(q, name)
+    return out_dir
 
 
 def hourly_window_kpi(
@@ -443,11 +485,6 @@ ORDER BY window_start, event_type
     "custom-merge streaming twin: q144.",
 )
 def q164_watermark_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..catalog import load
-    from ..workdirs import replay_workdir
-
     work = replay_workdir("wm_replay")
     landing = os.path.join(work, "drops")
     os.makedirs(landing)
@@ -497,15 +534,10 @@ def q164_watermark_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assert n_flush > 0, "empty flush drop — day-3 window would never finalize"
 
-    _write_json_drops(work, [(landing, i, f) for i, f in enumerate(drops)])
+    write_drops(work, _drops(landing, drops), ordered=True)
 
-    schema = (
-        "ts_us long, user_id long, event_type string, cents long"
-    )
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .json(landing)
+        _json_stream(spark, landing, "ts_us long, user_id long, event_type string, cents long")
         .select(
             F.timestamp_micros("ts_us").alias("ts"),
             "event_type",
@@ -524,43 +556,19 @@ def q164_watermark_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_cents",
         )
     )
-    out_dir = os.path.join(work, "sink")
-    # day-3's finalization rides on the trailing no-data micro-batch;
-    # pin the (default-on) conf so the oracle's third window doesn't
-    # silently depend on a deployment override — and restore the
-    # caller's value afterwards, same as shuffle.partitions below
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    # state-partition sizing: shuffle.partitions at stream start IS the
-    # StateStore partition count for the query's lifetime. This agg's
-    # keyspace is (4 windows × 5 event types) — 32 state partitions is
-    # pure per-batch task overhead (measured 7.8→4.3 s at sf0.1 going
-    # 32→8). Production sizes this to state keyspace the same way.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    if not finished:
-        q.stop()
-        raise RuntimeError(
-            "q164_watermark_window_replay: availableNow drain did not "
-            "finish within 600 s"
-        )
+    out_dir = drain(stream, work, "q164_watermark_window_replay", {
+        # day-3's finalization rides on the trailing no-data
+        # micro-batch; pin the (default-on) conf so the oracle's third
+        # window doesn't silently depend on a deployment override
+        _NO_DATA: "true",
+        # state-partition sizing: shuffle.partitions at stream start IS
+        # the StateStore partition count for the query's lifetime. This
+        # agg's keyspace is (4 windows × 5 event types) — 32 state
+        # partitions is pure per-batch task overhead (measured 7.8→4.3 s
+        # at sf0.1 going 32→8). Production sizes this to state keyspace
+        # the same way.
+        _PARTS: "8",
+    })
     return (
         spark.read.parquet(out_dir)
         .select(
@@ -635,11 +643,6 @@ ORDER BY a.user_id, session_start
     "path was actually exercised).",
 )
 def q165_streaming_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..catalog import load
-    from ..workdirs import replay_workdir
-
     work = replay_workdir("sess_replay")
     landing = os.path.join(work, "drops")
     os.makedirs(landing)
@@ -688,12 +691,10 @@ def q165_streaming_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFr
         "merge was not exercised"
     )
 
-    _write_json_drops(work, [(landing, i, f) for i, f in enumerate(drops)])
+    write_drops(work, _drops(landing, drops), ordered=True)
 
     stream = (
-        spark.readStream.schema("ts_us long, user_id long")
-        .option("maxFilesPerTrigger", "1")
-        .json(landing)
+        _json_stream(spark, landing, "ts_us long, user_id long")
         .select(F.timestamp_micros("ts_us").alias("ts"), "user_id")
     )
     # idle_timeout=False: with processing-time timeouts registered,
@@ -702,21 +703,7 @@ def q165_streaming_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFr
     # batches); the replay withholds open sessions anyway, so the
     # timeout's only job doesn't apply here.
     sess = sessionize(stream, gap_ms=30 * 60 * 1000, idle_timeout=False)
-    out_dir = os.path.join(work, "sink")
-    q = (
-        sess.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(
-            "q165_streaming_sessionize_replay: availableNow drain did "
-            "not finish within 600 s"
-        )
+    out_dir = drain(sess, work, "q165_streaming_sessionize_replay")
     return (
         spark.read.parquet(out_dir)
         .select(
@@ -805,11 +792,6 @@ ORDER BY click_id, purchase_id
 def q167_stream_stream_interval_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-
-    from ..catalog import load
-    from ..workdirs import replay_workdir
-
     work = replay_workdir("ssj_replay")
     land_l = os.path.join(work, "clicks")
     land_r = os.path.join(work, "purchases")
@@ -891,20 +873,11 @@ def q167_stream_stream_interval_join(
     )
 
     # one file per batch, L_i and R_i pairing into micro-batch i
-    _write_json_drops(
-        work,
-        [
-            (landing, i, frame)
-            for landing, drops in ((land_l, ldrops), (land_r, rdrops))
-            for i, frame in enumerate(drops)
-        ],
-    )
+    write_drops(work, _drops(land_l, ldrops) + _drops(land_r, rdrops), ordered=True)
 
     schema = "ts_us long, user_id long, event_id long"
     ls = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .json(land_l)
+        _json_stream(spark, land_l, schema)
         .select(
             F.timestamp_micros("ts_us").alias("click_ts"),
             "user_id",
@@ -912,9 +885,7 @@ def q167_stream_stream_interval_join(
         )
     )
     rs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .json(land_r)
+        _json_stream(spark, land_r, schema)
         .select(
             F.timestamp_micros("ts_us").alias("purchase_ts"),
             F.col("user_id").alias("r_user_id"),
@@ -937,42 +908,19 @@ def q167_stream_stream_interval_join(
         F.unix_micros("click_ts").alias("click_ts_us"),
         F.unix_micros("purchase_ts").alias("purchase_ts_us"),
     )
-    out_dir = os.path.join(work, "sink")
-    # state-partition sizing (the q164 note): the join buffers a few
-    # thousand rows — 32 StateStore partitions is per-batch overhead
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # no trailing no-data micro-batch (round 15): an INNER interval
-    # join emits on match only — the watermark-advance batch after the
-    # last drop can evict state but can never add sink rows, so it is
-    # pure trigger overhead here (A/B at sf0.1: 6.5 → 5.4 s, sink
-    # exceptAll both ways = 0). q164/q169 MUST keep it true (their
-    # window finalization / null emission ride on it); restored below.
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    if not finished:
-        q.stop()
-        raise RuntimeError(
-            "q167_stream_stream_interval_join: availableNow drain did "
-            "not finish within 600 s"
-        )
+    out_dir = drain(joined, work, "q167_stream_stream_interval_join", {
+        # no trailing no-data micro-batch (round 15): an INNER interval
+        # join emits on match only — the watermark-advance batch after
+        # the last drop can evict state but can never add sink rows, so
+        # it is pure trigger overhead here (A/B at sf0.1: 6.5 → 5.4 s,
+        # sink exceptAll both ways = 0). q164/q169 MUST keep it true
+        # (their window finalization / null emission ride on it).
+        _NO_DATA: "false",
+        # state-partition sizing (the q164 note): the join buffers a
+        # few thousand rows — 32 StateStore partitions is per-batch
+        # overhead
+        _PARTS: "8",
+    })
     return (
         spark.read.parquet(out_dir)
         .select("click_id", "purchase_id", "user_id", "click_ts_us", "purchase_ts_us")
@@ -1039,11 +987,6 @@ ORDER BY click_id, purchase_id
 def q169_stream_outer_join_null_emission(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-
-    from ..catalog import load
-    from ..workdirs import replay_workdir
-
     work = replay_workdir("ssj_outer_replay")
     land_l = os.path.join(work, "clicks")
     land_r = os.path.join(work, "purchases")
@@ -1123,20 +1066,11 @@ def q169_stream_outer_join_null_emission(
         "null emission"
     )
 
-    _write_json_drops(
-        work,
-        [
-            (landing, i, frame)
-            for landing, drops in ((land_l, ldrops), (land_r, rdrops))
-            for i, frame in enumerate(drops)
-        ],
-    )
+    write_drops(work, _drops(land_l, ldrops) + _drops(land_r, rdrops), ordered=True)
 
     schema = "ts_us long, user_id long, event_id long"
     ls = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .json(land_l)
+        _json_stream(spark, land_l, schema)
         .select(
             F.timestamp_micros("ts_us").alias("click_ts"),
             "user_id",
@@ -1144,9 +1078,7 @@ def q169_stream_outer_join_null_emission(
         )
     )
     rs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .json(land_r)
+        _json_stream(spark, land_r, schema)
         .select(
             F.timestamp_micros("ts_us").alias("purchase_ts"),
             F.col("user_id").alias("r_user_id"),
@@ -1170,36 +1102,13 @@ def q169_stream_outer_join_null_emission(
         F.unix_micros("click_ts").alias("click_ts_us"),
         F.unix_micros("purchase_ts").alias("purchase_ts_us"),
     )
-    out_dir = os.path.join(work, "sink")
-    # the null emission for closed windows rides on the trailing
-    # no-data micro-batch — pin the (default-on) conf and restore it
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    if not finished:
-        q.stop()
-        raise RuntimeError(
-            "q169_stream_outer_join_null_emission: availableNow drain "
-            "did not finish within 600 s"
-        )
+    out_dir = drain(joined, work, "q169_stream_outer_join_null_emission", {
+        # the null emission for closed windows rides on the trailing
+        # no-data micro-batch — pin the (default-on) conf
+        _NO_DATA: "true",
+        # state-partition sizing (the q164 note)
+        _PARTS: "8",
+    })
     out = spark.read.parquet(out_dir)
     # the sentinel must have been withheld (open window at end of
     # stream) — if it leaked, the open-window contract broke even
@@ -1279,11 +1188,6 @@ ORDER BY event_id, user_id, event_type, ts_us
     "twin: q19; pytest twin: tests/test_streaming.py dedup_stream.",
 )
 def q170_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..catalog import load
-    from ..workdirs import replay_workdir
-
     work = replay_workdir("sdedup_replay")
     landing = os.path.join(work, "events")
     os.makedirs(landing)
@@ -1333,56 +1237,28 @@ def q170_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         s[k] > 0 for k in ("d0", "d1", "d2", "n_same", "n_cross", "n_rep")
     ), f"empty drop or duplicate class in {dict(s.asDict())}"
 
-    _write_json_drops(work, [(landing, i, f) for i, f in enumerate(drops)])
+    write_drops(work, _drops(landing, drops), ordered=True)
 
-    schema = "event_id long, user_id long, event_type string, ts_us long"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .json(landing)
-        .withColumn("ts", F.timestamp_micros("ts_us"))
-    )
+    stream = _json_stream(
+        spark, landing, "event_id long, user_id long, event_type string, ts_us long"
+    ).withColumn("ts", F.timestamp_micros("ts_us"))
     deduped = dedup_stream(
         stream,
         keys=["event_id", "user_id", "event_type", "ts_us"],
         ts_col="ts",
         watermark_delay="2 days",
     ).drop("ts")
-    out_dir = os.path.join(work, "sink")
-    # dedup state is a few thousand keys — 32 StateStore partitions
-    # would be per-batch overhead (the q164 sizing note)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # no trailing no-data micro-batch (round 15, the q167 note):
-    # dropDuplicatesWithinWatermark PASSES first-seen rows through in
-    # the batch they arrive — the watermark-advance batch after the
-    # last drop only drops expired state keys and can never add sink
-    # rows (A/B at sf0.1: sink exceptAll both ways = 0); restored below.
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    if not finished:
-        q.stop()
-        raise RuntimeError(
-            "q170_streaming_dedup_replay: availableNow drain did not "
-            "finish within 600 s"
-        )
+    out_dir = drain(deduped, work, "q170_streaming_dedup_replay", {
+        # no trailing no-data micro-batch (round 15, the q167 note):
+        # dropDuplicatesWithinWatermark PASSES first-seen rows through
+        # in the batch they arrive — the watermark-advance batch after
+        # the last drop only drops expired state keys and can never add
+        # sink rows (A/B at sf0.1: sink exceptAll both ways = 0)
+        _NO_DATA: "false",
+        # dedup state is a few thousand keys — 32 StateStore partitions
+        # would be per-batch overhead (the q164 sizing note)
+        _PARTS: "8",
+    })
     return (
         spark.read.parquet(out_dir)
         .select("event_id", "user_id", "event_type", "ts_us")
@@ -1446,11 +1322,6 @@ ORDER BY event_id, user_id, ts_us
     "classes are non-empty in both drops.",
 )
 def q172_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..catalog import load
-    from ..workdirs import replay_workdir
-
     work = replay_workdir("sstatic_replay")
     landing = os.path.join(work, "events")
     os.makedirs(landing)
@@ -1485,9 +1356,8 @@ def q172_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
         "matched/unmatched contract would be under-exercised"
     )
 
-    _write_json_drops(
-        work,
-        [(landing, i, f) for i, f in enumerate((base.filter(t < mid), base.filter(t >= mid)))],
+    write_drops(
+        work, _drops(landing, (base.filter(t < mid), base.filter(t >= mid))), ordered=True
     )
 
     dim = (
@@ -1495,11 +1365,8 @@ def q172_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("c_custkey") % 2 == 0)
         .select("c_custkey", "c_mktsegment", "c_nationkey")
     )
-    schema = "event_id long, user_id long, event_type string, ts_us long"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .json(landing)
+    stream = _json_stream(
+        spark, landing, "event_id long, user_id long, event_type string, ts_us long"
     )
     enriched = stream.join(
         F.broadcast(dim), stream["user_id"] == dim["c_custkey"], "left"
@@ -1511,27 +1378,10 @@ def q172_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("c_mktsegment").alias("segment"),
         F.col("c_nationkey").alias("nation_key"),
     )
-    out_dir = os.path.join(work, "sink")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            enriched.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    if not finished:
-        q.stop()
-        raise RuntimeError(
-            "q172_stream_static_enrichment: availableNow drain did "
-            "not finish within 600 s"
-        )
+    # 8 partitions as the q164 sizing note sets for the stateful
+    # replays; this stateless broadcast join has no exchange for it to
+    # size
+    out_dir = drain(enriched, work, "q172_stream_static_enrichment", {_PARTS: "8"})
     return (
         spark.read.parquet(out_dir)
         .select("event_id", "user_id", "event_type", "ts_us", "segment", "nation_key")

@@ -446,6 +446,34 @@ def test_q145_replay_version_structure(spark):
     assert any(k % 10 == 5 for k in loc_dim)
 
 
+
+def test_replay_runner_rerun_guard_fires(spark, tmp_path, monkeypatch):
+    """The shared replay runner's in-query exactly-once guard: with a
+    ledger that forgets what it loaded, the day-2 rerun re-processes
+    every entity and q145 must fail loudly, not hash the churn."""
+    from real_time_data_pipeline_for_restaurant_analytics_spark.registry import (
+        all_queries,
+    )
+    from real_time_data_pipeline_for_restaurant_analytics_spark.sources.ledger import (
+        FileLedger,
+    )
+
+    from .conftest import SF_SMOKE
+
+    real = FileLedger.unprocessed
+
+    def forgetful(self, candidates):
+        real(self, candidates)  # records the decision-time fingerprints
+        return list(candidates)
+
+    monkeypatch.setattr(FileLedger, "unprocessed", forgetful)
+    monkeypatch.setenv("SPARK_GRAFT_TMPDIR", str(tmp_path))
+    with pytest.raises(
+        RuntimeError,
+        match="q145_pipeline_replay: day-2 rerun re-processed .* exactly-once contract is broken",
+    ):
+        all_queries()["q145_pipeline_replay"].build(spark, SF_SMOKE)
+
 def test_q147_json_replay_structure_and_dedup(spark):
     """q147 (round-10, extended round-12): the JSON-sourced entity
     replay's SCD2 shape per key class (same classes as q145, including

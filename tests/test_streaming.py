@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.entities import ENTITIES
@@ -634,3 +635,132 @@ def test_q164_watermark_replay_structure(spark):
     assert got[JAN1 + 2 * 86400] == day_count(
         3, F.col("user_id") % 5 == 0
     )  # stragglers ACCEPTED (double count)
+
+
+def _replay_dir(tmp_path, family: str) -> str:
+    """The one work dir a replay made under ``$SPARK_GRAFT_TMPDIR``."""
+    root = tmp_path / f"spark_graft_{family}"
+    (work,) = os.listdir(root)
+    return str(root / work)
+
+
+def _batches(work: str) -> int:
+    """Committed micro-batches recorded in the replay's checkpoint."""
+    return sum(f.isdigit() for f in os.listdir(os.path.join(work, "ckpt", "commits")))
+
+
+@pytest.mark.parametrize(
+    "name, family",
+    [
+        ("q167_stream_stream_interval_join", "ssj_replay"),
+        ("q170_streaming_dedup_replay", "sdedup_replay"),
+    ],
+)
+def test_no_data_batch_skip_keeps_sink(spark, tmp_path, monkeypatch, name, family):
+    """q167/q170 turn the trailing no-data micro-batch off (round 15):
+    an inner interval join and a watermark dedup emit rows only in the
+    batch their input arrives, so the watermark-advance batch can never
+    add sink rows. Pinned here: the sink equals the DuckDB oracle, the
+    checkpoint commits 3 batches, and a rerun with the no-data batch
+    forced back on commits 4 and leaves a sink equal both ways."""
+    from real_time_data_pipeline_for_restaurant_analytics_spark.registry import (
+        all_queries,
+    )
+    from real_time_data_pipeline_for_restaurant_analytics_spark.streaming import (
+        windows,
+    )
+
+    from .conftest import SF_SMOKE as sf
+    from .oracle_check import compare
+
+    q = all_queries()[name]
+    off_dir, on_dir = tmp_path / "off", tmp_path / "on"
+
+    monkeypatch.setenv("SPARK_GRAFT_TMPDIR", str(off_dir))
+    off = q.build(spark, sf)
+    assert compare(spark, name, lambda s, d: off, q.oracle, sf) == []
+    assert _batches(_replay_dir(off_dir, family)) == 3
+
+    real_drain = windows.drain
+
+    def no_data_on(stream, work, qname, conf=None):
+        assert conf[windows._NO_DATA] == "false"
+        return real_drain(stream, work, qname, {**conf, windows._NO_DATA: "true"})
+
+    monkeypatch.setattr(windows, "drain", no_data_on)
+    monkeypatch.setenv("SPARK_GRAFT_TMPDIR", str(on_dir))
+    on = q.build(spark, sf)
+    assert _batches(_replay_dir(on_dir, family)) == 4
+    assert off.count() > 0
+    assert off.exceptAll(on).count() == 0 and on.exceptAll(off).count() == 0
+
+
+def test_drain_restores_caller_conf(spark, tmp_path, monkeypatch):
+    """The drain sets a replay's confs only around ``start()``: the
+    caller's shuffle.partitions and no-data-batch values are back while
+    the query runs, after it, and on the timeout and start-failure
+    paths — yet the query keeps what it started with (q164's offsets/0
+    records 8 partitions, and its day-3 window, which only the
+    trailing no-data batch finalizes, still matches the oracle with the
+    caller's no-data batches off)."""
+    import json
+
+    from pyspark.errors import AnalysisException
+
+    from real_time_data_pipeline_for_restaurant_analytics_spark.registry import (
+        all_queries,
+    )
+    from real_time_data_pipeline_for_restaurant_analytics_spark.streaming import (
+        windows,
+    )
+
+    from .conftest import SF_SMOKE as sf
+    from .oracle_check import compare
+
+    keys = (windows._PARTS, windows._NO_DATA)
+    caller = {windows._PARTS: "5", windows._NO_DATA: "false"}
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    seen = []
+    real_await = windows.await_drain
+
+    def await_and_look(q, name):
+        seen.append({k: spark.conf.get(k) for k in keys})
+        return real_await(q, name)
+
+    monkeypatch.setattr(windows, "await_drain", await_and_look)
+    monkeypatch.setenv("SPARK_GRAFT_TMPDIR", str(tmp_path))
+    try:
+        for k, v in caller.items():
+            spark.conf.set(k, v)
+        q = all_queries()["q164_watermark_window_replay"]
+        got = q.build(spark, sf)
+        assert seen == [caller]  # while the query ran
+        assert {k: spark.conf.get(k) for k in keys} == caller
+        assert compare(spark, q.name, lambda s, d: got, q.oracle, sf) == []
+        work = _replay_dir(tmp_path, "wm_replay")
+        with open(os.path.join(work, "ckpt", "offsets", "0")) as f:
+            meta = json.loads(f.read().splitlines()[1])
+        assert meta["conf"]["spark.sql.shuffle.partitions"] == "8"
+
+        landing = str(tmp_path / "landing")
+        os.makedirs(landing)
+        with open(os.path.join(landing, "drop0.json"), "w") as f:
+            f.write('{"x": 1}\n')
+        stream = windows._json_stream(spark, landing, "x long")
+        pinned = {windows._PARTS: "8", windows._NO_DATA: "true"}
+
+        monkeypatch.setattr(windows, "_DRAIN_TIMEOUT_S", 0.001)
+        with pytest.raises(RuntimeError, match="timeout_probe: availableNow drain"):
+            windows.drain(stream, str(tmp_path / "t"), "timeout_probe", pinned)
+        assert {k: spark.conf.get(k) for k in keys} == caller
+
+        # append mode rejects an un-watermarked aggregation at start()
+        with pytest.raises(AnalysisException):
+            windows.drain(stream.groupBy("x").count(), str(tmp_path / "s"), "start_probe", pinned)
+        assert {k: spark.conf.get(k) for k in keys} == caller
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
