@@ -53,7 +53,7 @@ from ..operators.dedup import (
 )
 from ..catalog import load
 from ..registry import register
-from ..workdirs import replay_workdir, write_drops
+from ..workdirs import json_drops, replay_workdir, write_drops
 from .windows import await_drain
 
 DOC_SCHEMA = "doc_id long, text string"
@@ -220,11 +220,7 @@ def q144_streaming_scrub_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-batches by modification time, so each drop is exactly one
     # batch and drop 0 always precedes drop 1 (drops written
     # concurrently — see write_drops)
-    write_drops(
-        work,
-        [(f, os.path.join(landing, f"drop{i}.json")) for i, f in enumerate(drops)],
-        ordered=True,
-    )
+    write_drops(work, json_drops(landing, drops))
 
     q = scrub_stream(
         spark,

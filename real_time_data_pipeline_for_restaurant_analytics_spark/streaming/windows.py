@@ -34,7 +34,7 @@ from pyspark.sql.types import (
 
 from ..catalog import load
 from ..registry import register
-from ..workdirs import replay_workdir, write_drops
+from ..workdirs import json_drops, replay_workdir, write_drops
 
 
 _NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -49,11 +49,6 @@ def _json_stream(spark: SparkSession, landing: str, schema: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .json(landing)
     )
-
-
-def _drops(landing: str, frames) -> list:
-    """``write_drops`` plan rows: frame i lands as ``drop{i}.json``."""
-    return [(f, os.path.join(landing, f"drop{i}.json")) for i, f in enumerate(frames)]
 
 
 def await_drain(q: StreamingQuery, name: str) -> None:
@@ -534,7 +529,7 @@ def q164_watermark_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assert n_flush > 0, "empty flush drop — day-3 window would never finalize"
 
-    write_drops(work, _drops(landing, drops), ordered=True)
+    write_drops(work, json_drops(landing, drops))
 
     stream = (
         _json_stream(spark, landing, "ts_us long, user_id long, event_type string, cents long")
@@ -691,7 +686,7 @@ def q165_streaming_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFr
         "merge was not exercised"
     )
 
-    write_drops(work, _drops(landing, drops), ordered=True)
+    write_drops(work, json_drops(landing, drops))
 
     stream = (
         _json_stream(spark, landing, "ts_us long, user_id long")
@@ -873,7 +868,7 @@ def q167_stream_stream_interval_join(
     )
 
     # one file per batch, L_i and R_i pairing into micro-batch i
-    write_drops(work, _drops(land_l, ldrops) + _drops(land_r, rdrops), ordered=True)
+    write_drops(work, json_drops(land_l, ldrops) + json_drops(land_r, rdrops))
 
     schema = "ts_us long, user_id long, event_id long"
     ls = (
@@ -1066,7 +1061,7 @@ def q169_stream_outer_join_null_emission(
         "null emission"
     )
 
-    write_drops(work, _drops(land_l, ldrops) + _drops(land_r, rdrops), ordered=True)
+    write_drops(work, json_drops(land_l, ldrops) + json_drops(land_r, rdrops))
 
     schema = "ts_us long, user_id long, event_id long"
     ls = (
@@ -1237,7 +1232,7 @@ def q170_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         s[k] > 0 for k in ("d0", "d1", "d2", "n_same", "n_cross", "n_rep")
     ), f"empty drop or duplicate class in {dict(s.asDict())}"
 
-    write_drops(work, _drops(landing, drops), ordered=True)
+    write_drops(work, json_drops(landing, drops))
 
     stream = _json_stream(
         spark, landing, "event_id long, user_id long, event_type string, ts_us long"
@@ -1356,9 +1351,7 @@ def q172_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
         "matched/unmatched contract would be under-exercised"
     )
 
-    write_drops(
-        work, _drops(landing, (base.filter(t < mid), base.filter(t >= mid))), ordered=True
-    )
+    write_drops(work, json_drops(landing, (base.filter(t < mid), base.filter(t >= mid))))
 
     dim = (
         load(spark, sf_dir, "customer")
@@ -1378,10 +1371,7 @@ def q172_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("c_mktsegment").alias("segment"),
         F.col("c_nationkey").alias("nation_key"),
     )
-    # 8 partitions as the q164 sizing note sets for the stateful
-    # replays; this stateless broadcast join has no exchange for it to
-    # size
-    out_dir = drain(enriched, work, "q172_stream_static_enrichment", {_PARTS: "8"})
+    out_dir = drain(enriched, work, "q172_stream_static_enrichment")
     return (
         spark.read.parquet(out_dir)
         .select("event_id", "user_id", "event_type", "ts_us", "segment", "nation_key")

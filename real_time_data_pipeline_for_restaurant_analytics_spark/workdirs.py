@@ -65,7 +65,13 @@ def replay_workdir(family: str, max_age_s: float = 3600.0) -> str:
     return work
 
 
-def write_drops(scratch: str, plan: list, ordered: bool = False) -> None:
+def json_drops(landing: str, frames) -> list:
+    """:func:`write_drops` plan rows for a streaming landing dir: frame
+    ``i`` lands as ``drop{i}.json``."""
+    return [(f, os.path.join(landing, f"drop{i}.json")) for i, f in enumerate(frames)]
+
+
+def write_drops(scratch: str, plan: list) -> None:
     """Write each ``(frame, dst)`` of ``plan`` as ONE file at ``dst``
     (the `YYYY/M/D/<entity>.<ext>` drop contract, S8, and the
     streaming replays' one-file-per-micro-batch landing dirs): a
@@ -73,10 +79,13 @@ def write_drops(scratch: str, plan: list, ordered: bool = False) -> None:
     single part file moves into place. The format follows ``dst``'s
     extension — ``.csv`` (with a header row) or ``.json``.
 
-    ``ordered=True`` stamps file ``i`` of the plan with mtime
-    1_700_000_000 + i: the file source orders micro-batches by
-    modification time, so the stamp keeps the batch ORDER independent
-    of write completion order.
+    File ``i`` of the plan is stamped with mtime 1_700_000_000 + i:
+    the streaming file source orders micro-batches by modification
+    time, so the stamp keeps the batch ORDER independent of write
+    completion order. Every plan path is a distinct file, so the
+    ledger's path+size+mtime fingerprint still tells the batch drops
+    apart, and the stage audit columns read from the mtime come out
+    the same on every run.
 
     The writes run CONCURRENTLY on a pool capped at 8 (guide §2.6:
     each is an independent job, and the scheduler overlaps concurrent
@@ -102,8 +111,7 @@ def write_drops(scratch: str, plan: list, ordered: bool = False) -> None:
         part = next(f for f in sorted(os.listdir(tmp)) if f.endswith("." + fmt))
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         os.replace(os.path.join(tmp, part), dst)
-        if ordered:
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
         shutil.rmtree(tmp, ignore_errors=True)
 
     frames, dsts = zip(*plan)
